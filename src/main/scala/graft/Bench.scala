@@ -169,13 +169,13 @@ object Bench {
     else math.min(first, calibrateOnce(spark, splits))
   }
 
-  /** Extract the per-query map (and the sf basename, if recorded) from
-    * a committed bench JSON (bench_out.json format). Hand-rolled on
-    * purpose: values are flat numbers, so the queries object ends at
-    * the first '}' after its opening brace; no JSON library in the
-    * dependency budget.
+  /** Extract the per-query map (and the sf basename and core count, if
+    * recorded) from a committed bench JSON (bench_out.json format).
+    * Hand-rolled on purpose: values are flat numbers, so the queries
+    * object ends at the first '}' after its opening brace; no JSON
+    * library in the dependency budget.
     */
-  def parseBaseline(json: String): (Map[String, Double], Option[String]) = {
+  def parseBaseline(json: String): (Map[String, Double], Option[String], Option[Int]) = {
     val qKey = "\"queries\":{"
     val qStart = json.indexOf(qKey)
     val queries: Map[String, Double] =
@@ -186,7 +186,8 @@ object Bench {
         entry.findAllMatchIn(body).map(m => m.group(1) -> m.group(2).toDouble).toMap
       }
     val sf = "\"sf\":\"([^\"]+)\"".r.findFirstMatchIn(json).map(_.group(1).split('/').last)
-    (queries, sf)
+    val cpus = "\"cpus\":([0-9]+)".r.findFirstMatchIn(json).map(_.group(1).toInt)
+    (queries, sf, cpus)
   }
 
   /** The self-history sentinel's full reading: the median ratio (None =
@@ -244,6 +245,18 @@ object Bench {
     HistorySignal(factor, ratios.size,
       (baseDropped.filter(curIds.contains) ++ curDropped).distinct.sorted)
   }
+
+  /** Why the self-history sentinel must abstain against this baseline,
+    * or None when it applies: the baseline was recorded at another sf
+    * (ratios would measure data growth) or on another core count (they
+    * would measure the machine). A baseline that does not record its
+    * core count predates the field and is taken as comparable.
+    */
+  def historyOffReason(baseSf: Option[String], baseCpus: Option[Int],
+                       runSf: String, runCpus: Int): Option[String] =
+    if (!baseSf.contains(runSf))
+      Some(s"baseline sf ${baseSf.getOrElse("unknown")} != run sf $runSf")
+    else baseCpus.filter(_ != runCpus).map(c => s"baseline cpus $c != run cpus $runCpus")
 
   def medianRatio(current: Seq[(String, Double)], baseline: Map[String, Double]): Option[Double] =
     historySignal(current, baseline).factor
@@ -411,27 +424,29 @@ object Bench {
     val sfShort = sfDir.split('/').last
     // self-history: per-query ratios vs the last committed clean bench
     // (bench_out.json format). Applied only when the baseline was
-    // recorded at the SAME sf — cross-sf ratios measure data growth,
-    // not pollution.
+    // recorded at the SAME sf and on the same core count — cross-sf
+    // ratios measure data growth, cross-host ratios the machine, not
+    // pollution.
     val baselinePath = sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", "BENCH_CLEAN.json")
-    val (baseQueries, baseSf) = (try {
+    val (baseQueries, baseSf, baseCpus) = (try {
       val p = Paths.get(baselinePath)
       if (Files.exists(p)) parseBaseline(Files.readString(p))
-      else (Map.empty[String, Double], None)
-    } catch { case _: Throwable => (Map.empty[String, Double], None) })
+      else (Map.empty[String, Double], None, None)
+    } catch { case _: Throwable => (Map.empty[String, Double], None, None) })
+    val sentinelOff = historyOffReason(baseSf, baseCpus, sfShort, cpusN)
     val histSignal =
-      if (baseSf.contains(sfShort)) historySignal(timed, baseQueries)
+      if (sentinelOff.isEmpty) historySignal(timed, baseQueries)
       else HistorySignal(None, 0, Nil)
     // parallel to the ABSTAINED message below: when the sentinel is off
-    // because the baseline was recorded at a different sf, say so — a
-    // noisy:false on such a run is probe-only, and the reader must not
-    // mistake history_n:0 for a coverage bug
-    if (baseQueries.nonEmpty && !baseSf.contains(sfShort))
-      System.err.println(s"[bench] history sentinel OFF: baseline sf ${baseSf.getOrElse("unknown")} != run sf $sfShort — noisy verdict is CPU-probe-only")
+    // because the baseline was recorded at a different sf or core count,
+    // say so — a noisy:false on such a run is probe-only, and the reader
+    // must not mistake history_n:0 for a coverage bug
+    if (baseQueries.nonEmpty)
+      sentinelOff.foreach(r => System.err.println(s"[bench] history sentinel OFF: $r — noisy verdict is CPU-probe-only"))
     val histFactorOpt = histSignal.factor
     if (histSignal.droppedIds.nonEmpty)
       System.err.println(s"[bench] history sentinel dropped ${histSignal.droppedIds.size} ambiguous short ids: ${histSignal.droppedIds.mkString(", ")}")
-    if (baseSf.contains(sfShort) && histFactorOpt.isEmpty)
+    if (sentinelOff.isEmpty && histFactorOpt.isEmpty)
       System.err.println(s"[bench] history sentinel ABSTAINED: only ${histSignal.matched} baseline-matched queries (need $HistoryMinQueries)")
     val histNoisy = histFactorOpt.exists(_ > HistoryNoisyFactor)
     val noisy = cpuNoisy || histNoisy

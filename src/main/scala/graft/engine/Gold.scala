@@ -7,7 +7,9 @@ import org.apache.spark.sql.functions._
   * `etl/tasks/silver.py:29-62`, `etl/tasks/gold.py:12-65` — SURVEY §2.1
   * S5/S6): silver + gold are written to parquet ONCE per (JVM, sfDir) and
   * every analytics/SQL query reads the written layer back instead of
-  * re-deriving it from base scans.
+  * re-deriving it from base scans. The readers go through
+  * [[Tables.parquet]], so a session lists each layer's files and infers
+  * its schema once, not once per request.
   *
   * Scale posture: this is the single biggest 100 TB lever in the repo —
   * the orders⋈lineitem fact shuffle happens once per pipeline run, not
@@ -173,10 +175,10 @@ object Gold {
     }
 
   def silverOrders(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${ensure(spark, sfDir)}/silver_orders")
+    Tables.parquet(spark, s"${ensure(spark, sfDir)}/silver_orders")
 
   def silverLineitem(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${ensure(spark, sfDir)}/silver_lineitem")
+    Tables.parquet(spark, s"${ensure(spark, sfDir)}/silver_lineitem")
 
   /** Gold fact in the canonical column order of [[Medallion.factSales]]
     * (the `order_period` partition column stays available for pruning but
@@ -200,16 +202,16 @@ object Gold {
     * representation in between.
     */
   def factDecimal(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${ensure(spark, sfDir)}/fact_sales")
+    Tables.parquet(spark, s"${ensure(spark, sfDir)}/fact_sales")
       .select("order_id", "line_id", "customer_id", "product_id", "price",
         "freight_value", "order_purchase_timestamp", "delivery_time_days")
 
   def dimCustomer(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${ensure(spark, sfDir)}/dim_customers")
+    Tables.parquet(spark, s"${ensure(spark, sfDir)}/dim_customers")
 
   def dimPart(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${ensure(spark, sfDir)}/dim_products")
+    Tables.parquet(spark, s"${ensure(spark, sfDir)}/dim_products")
 
   def dimDate(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${ensure(spark, sfDir)}/dim_time")
+    Tables.parquet(spark, s"${ensure(spark, sfDir)}/dim_time")
 }

@@ -27,8 +27,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Sql {
 
   // last-registered sfDir per live session: a long-lived SQL surface
-  // registers its views once, not once per statement (re-registration
-  // re-resolves four parquet scans each call — measurable in the bench).
+  // registers its views once, not once per statement. The parquet scans
+  // behind the views resolve once per session anyway (Tables.parquet);
+  // this memo only skips re-registering the five views and the kernels.
   // Keyed weakly by the session so a stopped session doesn't pin state;
   // a DIFFERENT sfDir on the same session re-registers and wins.
   private val registered =

@@ -54,13 +54,33 @@ class BenchFoldSpec extends AnyFunSuite {
 
   test("baseline parse: queries map and sf basename out of bench_out.json format") {
     val json = """{"metric":"total","value":47.5,"unit":"sec","queries":{"a01_kpis":0.25,"o22_minhash":1.37,"t01_pricing":0.23},"setup_sec":9.4,"n_errors":0,"errors":{},"noisy":false,"sf":"/root/testdata/sf0.1"}"""
-    val (qs, sf) = Bench.parseBaseline(json)
+    val (qs, sf, cpus) = Bench.parseBaseline(json)
     assert(qs == Map("a01_kpis" -> 0.25, "o22_minhash" -> 1.37, "t01_pricing" -> 0.23))
     // sf compares as basename so a full-dir baseline matches a basename run
     assert(sf.contains("sf0.1"))
+    // this baseline predates the cpus field
+    assert(cpus.isEmpty)
     // degenerate inputs abstain instead of throwing
     assert(Bench.parseBaseline("not json at all")._1.isEmpty)
     assert(Bench.parseBaseline("""{"queries":{}}""")._1.isEmpty)
+  }
+
+  test("history sentinel abstains on a core-count mismatch, not only an sf mismatch") {
+    // the committed baseline was recorded on a 32-core host: per-query
+    // ratios against it from a 4-core run measure the machine, not noise
+    val json = """{"metric":"total","value":113.1,"unit":"sec","queries":{"a01_kpis":1.25},"setup_sec":9.4,"n_errors":0,"errors":{},"cpus":32,"noisy":false,"sf":"/data/sf0.1"}"""
+    val (_, sf, cpus) = Bench.parseBaseline(json)
+    assert(cpus.contains(32))
+    assert(Bench.historyOffReason(sf, cpus, "sf0.1", 4)
+      .contains("baseline cpus 32 != run cpus 4"))
+    assert(Bench.historyOffReason(sf, cpus, "sf0.1", 32).isEmpty)
+    // the sf mismatch keeps its own message and takes precedence
+    assert(Bench.historyOffReason(sf, cpus, "sf1", 4)
+      .contains("baseline sf sf0.1 != run sf sf1"))
+    // a baseline without the field stays comparable
+    assert(Bench.historyOffReason(sf, None, "sf0.1", 4).isEmpty)
+    assert(Bench.historyOffReason(None, None, "sf0.1", 4)
+      .contains("baseline sf unknown != run sf sf0.1"))
   }
 
   test("self-history: median per-query ratio, abstains below minimums") {
